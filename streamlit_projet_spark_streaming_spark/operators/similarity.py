@@ -519,10 +519,12 @@ def _gk_partials_mapper():
             # Ragged batches must fail loudly: the fused SUM(cnt)-per-dim
             # count downstream silently skews if dims ever vary (ADVICE
             # r10); np.stack already rejects in-batch raggedness, this
-            # pins batch-vs-codebook agreement.
-            assert u.shape[1] == cb.shape[1], (
-                f"embedding dim {u.shape[1]} != codebook dim {cb.shape[1]}"
-            )
+            # pins batch-vs-codebook agreement (a raise, not an assert:
+            # `python -O` strips asserts).
+            if u.shape[1] != cb.shape[1]:
+                raise ValueError(
+                    f"embedding dim {u.shape[1]} != codebook dim {cb.shape[1]}"
+                )
             best = np.argmin(_gk_d2(u, cb), axis=1)
             ui = u.astype(np.int64)
             out = {"j": [], "cnt": [], "sums": []}

@@ -15,11 +15,12 @@ parameterization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.numeric import cents, ratio_round, stable_avg_sql
-from ..operators.relational import bucketize, ordered_array_agg, stable_avg
+from ..operators.numeric import stable_avg_sql
+from ..operators.relational import bucketize
+from .preferences import GOLD_VIEWS, group_stats, item_stats, stats_top_k
 
 #: Age buckets exactly per ``bigquery_views.sql:5-12``: <25 → '18-24',
 #: BETWEEN 25 AND 34 → '25-34', …, BETWEEN 55 AND 64 → '55-64', ELSE '65+'.
@@ -31,53 +32,33 @@ def age_bucket_col() -> F.Column:
     return bucketize(F.col("age"), AGE_EDGES, AGE_LABELS)
 
 
-def _stats_plus_top1(df: DataFrame, key: str, key_alias: str | None = None) -> DataFrame:
-    """Shared shape of views 1-2: per-key stats branch LEFT JOIN top-1
-    category branch (``bigquery_views.sql:20-43`` and ``:49-72``).
+#: Measure sums the shopping views average — the streaming cube
+#: (``streaming.incremental.super_aggregate``) stores exactly these.
+MEASURES = {"amt": "purchase_amount_usd", "rat": "review_rating"}
+_SPEND = {"amt": MEASURES["amt"]}
 
-    Single fact aggregation: per-(key, category) count + sums, then BOTH
-    branches come from window functions over that dimension-sized
-    intermediate — one fact scan, no join (the reference scans ``orders``
-    once per branch and joins the branches back)."""
-    key_alias = key_alias or key
-    by_cat = df.groupBy(key, "category").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("purchase_amount_usd").alias("amt"),
-        F.sum("review_rating").alias("rat"),
-        # non-null measure counts: AVG ignores NULLs, so the window
-        # averages divide by these, not by COUNT(*)
-        F.count("purchase_amount_usd").alias("n_amt"),
-        F.count("review_rating").alias("n_rat"),
+
+def _bucketed(orders: DataFrame) -> DataFrame:
+    return orders.withColumn("age_bucket", age_bucket_col())
+
+
+def _stats_top1(rows: DataFrame, key: str) -> DataFrame:
+    """Shared shape of views 1-2: per-key stats branch LEFT JOIN top-1
+    category branch (``bigquery_views.sql:20-43`` and ``:49-72``)."""
+    parts = item_stats(rows, (key, "category"), MEASURES)
+    return stats_top_k(
+        parts, key, "category", {"avg_spend": "amt", "avg_rating": "rat"}, 1, "top_category"
     )
-    key_w = Window.partitionBy(key)
-    rank_w = key_w.orderBy(F.desc("cnt"), F.asc("category"))
-    return (
-        by_cat.withColumn("orders", F.sum("cnt").over(key_w))
-        # grid-units/count ratios rounded in exact integer space — the
-        # window twin of relational.stable_avg (r6 grid-quotient rule)
-        .withColumn(
-            "avg_spend",
-            ratio_round(
-                cents(F.sum("amt").over(key_w)), F.sum("n_amt").over(key_w) * 100, 4
-            ),
-        )
-        .withColumn(
-            "avg_rating",
-            ratio_round(
-                cents(F.sum("rat").over(key_w)), F.sum("n_rat").over(key_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col(key).alias(key_alias),
-            "orders",
-            "avg_spend",
-            "avg_rating",
-            F.col("category").alias("top_category"),
-        )
-        .orderBy(key_alias)
-    )
+
+
+def _top3_locations(rows: DataFrame) -> DataFrame:
+    parts = item_stats(rows, ("location", "category"), _SPEND)
+    return stats_top_k(parts, "location", "category", {"avg_spend": "amt"}, 3, "top_categories")
+
+
+def _age_gender_category(rows: DataFrame) -> DataFrame:
+    keys = ("age_bucket", "gender", "category")
+    return group_stats(item_stats(rows, keys, _SPEND), keys, {"avg_spend": "amt"})
 
 
 def v_age_preferences(orders: DataFrame) -> DataFrame:
@@ -85,22 +66,13 @@ def v_age_preferences(orders: DataFrame) -> DataFrame:
     COUNT/AVG(spend)/AVG(rating) ∥ top-1 category per bucket → LEFT JOIN.
     Output: age_bucket, orders, avg_spend, avg_rating, top_category
     (``:36-41``)."""
-    bucketed = orders.select(
-        age_bucket_col().alias("age_bucket"),
-        "purchase_amount_usd",
-        "review_rating",
-        "category",
-    )
-    return _stats_plus_top1(bucketed, "age_bucket")
+    return _stats_top1(_bucketed(orders), "age_bucket")
 
 
 def v_gender_preferences(orders: DataFrame) -> DataFrame:
     """``v_gender_preferences`` (``bigquery_views.sql:46-72``): same shape
     keyed on raw ``gender`` (``:54``). Output ``:65-70``."""
-    return _stats_plus_top1(
-        orders.select("gender", "purchase_amount_usd", "review_rating", "category"),
-        "gender",
-    )
+    return _stats_top1(orders, "gender")
 
 
 def v_location_preferences(orders: DataFrame) -> DataFrame:
@@ -109,51 +81,28 @@ def v_location_preferences(orders: DataFrame) -> DataFrame:
     LEFT JOIN → re-GROUP BY with ordered ARRAY_AGG (``:97``, count desc +
     category asc tie-break). Output: location, orders, avg_spend,
     top_categories ARRAY<STRING> (``:93-97``)."""
-    by_cat = orders.groupBy("location", "category").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("purchase_amount_usd").alias("amt"),
-        F.count("purchase_amount_usd").alias("n_amt"),
-    )
-    loc_w = Window.partitionBy("location")
-    rank_w = loc_w.orderBy(F.desc("cnt"), F.asc("category"))
-    return (
-        by_cat.withColumn("orders", F.sum("cnt").over(loc_w))
-        .withColumn(
-            "avg_spend",
-            ratio_round(
-                cents(F.sum("amt").over(loc_w)), F.sum("n_amt").over(loc_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") <= 3)
-        .groupBy("location", "orders", "avg_spend")
-        .agg(
-            ordered_array_agg(F.col("cnt"), F.col("category"), ascending=False).alias(
-                "top_categories"
-            )
-        )
-        .orderBy("location")
-    )
+    return _top3_locations(orders)
 
 
 def v_age_gender_category(orders: DataFrame) -> DataFrame:
     """``v_age_gender_category`` (``bigquery_views.sql:103-126``): age CASE
     bucket → three-key GROUP BY (bucket, gender, category) with COUNT + AVG
     (``:119-126``)."""
-    return (
-        orders.select(
-            age_bucket_col().alias("age_bucket"),
-            "gender",
-            "category",
-            "purchase_amount_usd",
-        )
-        .groupBy("age_bucket", "gender", "category")
-        .agg(
-            F.count(F.lit(1)).alias("orders"),
-            stable_avg("purchase_amount_usd").alias("avg_spend"),
-        )
-        .orderBy("age_bucket", "gender", "category")
+    return _age_gender_category(_bucketed(orders))
+
+
+def views_from_cube(cube: DataFrame) -> dict[str, DataFrame]:
+    """All four views re-derived from the streaming cube
+    (``streaming.incremental.super_aggregate``) by the same functions:
+    :func:`item_stats` re-sums the cube's stats, so this is
+    dimension-sized work with no silver scan."""
+    views = (
+        _stats_top1(cube, "age_bucket"),
+        _stats_top1(cube, "gender"),
+        _top3_locations(cube),
+        _age_gender_category(cube),
     )
+    return dict(zip(GOLD_VIEWS, views))
 
 
 #: SQL twins for the shopping-fixture parity tests (DuckDB dialect).

@@ -23,10 +23,11 @@ broadcast-joining the tiny aggregate branches.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import bucketize, ordered_array_agg, stable_avg
+from ..operators.relational import bucketize
+from .preferences import group_stats, item_stats, stats_top_k
 
 #: Six price buckets standing in for the reference's six age buckets
 #: (``bigquery_views.sql:5-12``). Upper-bound-exclusive edges + overflow.
@@ -42,6 +43,11 @@ PRICE_BUCKET_SQL = (
     "WHEN o_totalprice < 400000 THEN '300-400k' "
     "ELSE '400k+' END"
 )
+
+
+#: The one measure every fixture view averages, and its average's name.
+_PRICE = {"amt": "o_totalprice"}
+_AVG_PRICE = {"avg_price": "amt"}
 
 
 def price_bucket_col() -> F.Column:
@@ -64,46 +70,9 @@ def v_price_bucket_preferences(orders: DataFrame) -> DataFrame:
     the intermediate would also rescan the fact: per-branch column
     pruning makes the subplans non-identical, defeating ReuseExchange.)
     """
-    by_pri = (
-        orders.select(
-            price_bucket_col().alias("price_bucket"),
-            "o_totalprice",
-            "o_orderpriority",
-        )
-        .groupBy("price_bucket", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("o_totalprice").alias("amt"),
-            # non-null measure count: AVG ignores NULLs, so the window
-            # average below must divide by this, not by COUNT(*)
-            F.count("o_totalprice").alias("n_amt"),
-        )
-    )
-    bucket_w = Window.partitionBy("price_bucket")
-    rank_w = bucket_w.orderBy(F.desc("cnt"), F.asc("o_orderpriority"))
-    return (
-        by_pri.withColumn("orders", F.sum("cnt").over(bucket_w))
-        .withColumn(
-            "avg_price",
-            # round the window SUM to the cents grid before dividing —
-            # cross-engine float summation-order differences vanish there
-            # (see relational.stable_avg)
-            F.round(
-                F.round(F.sum("amt").over(bucket_w), 2)
-                / F.sum("n_amt").over(bucket_w),
-                4,
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "price_bucket",
-            "orders",
-            "avg_price",
-            F.col("o_orderpriority").alias("top_priority"),
-        )
-        .orderBy("price_bucket")
-    )
+    bucketed = orders.withColumn("price_bucket", price_bucket_col())
+    parts = item_stats(bucketed, ("price_bucket", "o_orderpriority"), _PRICE)
+    return stats_top_k(parts, "price_bucket", "o_orderpriority", _AVG_PRICE, 1, "top_priority")
 
 
 def v_status_preferences(orders: DataFrame) -> DataFrame:
@@ -112,31 +81,8 @@ def v_status_preferences(orders: DataFrame) -> DataFrame:
     Same shape as view 1 keyed on the raw ``o_orderstatus`` column —
     single fact aggregation, both branches via windows, no join.
     """
-    by_pri = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("o_totalprice").alias("amt"),
-        F.count("o_totalprice").alias("n_amt"),
-    )
-    key_w = Window.partitionBy("o_orderstatus")
-    rank_w = key_w.orderBy(F.desc("cnt"), F.asc("o_orderpriority"))
-    return (
-        by_pri.withColumn("orders", F.sum("cnt").over(key_w))
-        .withColumn(
-            "avg_price",
-            F.round(
-                F.round(F.sum("amt").over(key_w), 2) / F.sum("n_amt").over(key_w), 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_orderstatus",
-            "orders",
-            "avg_price",
-            F.col("o_orderpriority").alias("top_priority"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    parts = item_stats(orders, ("o_orderstatus", "o_orderpriority"), _PRICE)
+    return stats_top_k(parts, "o_orderstatus", "o_orderpriority", _AVG_PRICE, 1, "top_priority")
 
 
 def v_segment_preferences(orders: DataFrame, customer: DataFrame) -> DataFrame:
@@ -158,33 +104,9 @@ def v_segment_preferences(orders: DataFrame, customer: DataFrame) -> DataFrame:
         orders["o_custkey"] == customer["c_custkey"],
         "inner",
     ).select("c_mktsegment", "o_totalprice", "o_orderpriority")
-
-    by_pri = seg_orders.groupBy("c_mktsegment", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("o_totalprice").alias("amt"),
-        F.count("o_totalprice").alias("n_amt"),
-    )
-    seg_w = Window.partitionBy("c_mktsegment")
-    rank_w = seg_w.orderBy(F.desc("cnt"), F.asc("o_orderpriority"))
-    # windows replace the stats⋈top3 join; the re-group with passthrough
-    # keys (D7, bigquery_views.sql:100) folds the top-3 into the array
-    return (
-        by_pri.withColumn("orders", F.sum("cnt").over(seg_w))
-        .withColumn(
-            "avg_spend",
-            F.round(
-                F.round(F.sum("amt").over(seg_w), 2) / F.sum("n_amt").over(seg_w), 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") <= 3)
-        .groupBy("c_mktsegment", "orders", "avg_spend")
-        .agg(
-            ordered_array_agg(
-                F.col("cnt"), F.col("o_orderpriority"), ascending=False
-            ).alias("top_priorities")
-        )
-        .orderBy("c_mktsegment")
+    parts = item_stats(seg_orders, ("c_mktsegment", "o_orderpriority"), _PRICE)
+    return stats_top_k(
+        parts, "c_mktsegment", "o_orderpriority", {"avg_spend": "amt"}, 3, "top_priorities"
     )
 
 
@@ -195,17 +117,6 @@ def v_bucket_status_priority(orders: DataFrame) -> DataFrame:
     a single partial→final hash aggregation; the CASE bucketer pipelines
     into the scan stage (no extra pass).
     """
-    return (
-        orders.select(
-            price_bucket_col().alias("price_bucket"),
-            "o_orderstatus",
-            "o_orderpriority",
-            "o_totalprice",
-        )
-        .groupBy("price_bucket", "o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("orders"),
-            stable_avg("o_totalprice").alias("avg_price"),
-        )
-        .orderBy("price_bucket", "o_orderstatus", "o_orderpriority")
-    )
+    keys = ("price_bucket", "o_orderstatus", "o_orderpriority")
+    bucketed = orders.withColumn("price_bucket", price_bucket_col())
+    return group_stats(item_stats(bucketed, keys, _PRICE), keys, _AVG_PRICE)

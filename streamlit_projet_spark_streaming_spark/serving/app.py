@@ -24,6 +24,8 @@ from __future__ import annotations
 import os
 import time
 
+from ..plans.preferences import GOLD_VIEWS
+
 try:  # pragma: no cover - exercised only where streamlit is installed
     import streamlit as st
 
@@ -46,14 +48,6 @@ TABS = (
     "Anomalies",
     "Données brutes",
 )
-
-GOLD_VIEWS = (
-    "v_age_preferences",
-    "v_gender_preferences",
-    "v_location_preferences",
-    "v_age_gender_category",
-)
-
 
 def _spark():
     from ..session import get_spark

@@ -1,4 +1,4 @@
-"""Partitioned gold-table writer + packed training-shard export.
+"""Partitioned gold-table writer, swap-in gold publish + packed training-shard export.
 
 The reference materializes its gold layer as BigQuery views
 (``bigquery_views.sql:1-128``) and lets the warehouse own physical layout.
@@ -66,6 +66,33 @@ def write_partitioned(
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy(*partition_cols).parquet(path)
+
+
+def publish_table(df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df`` so a failed job
+    never leaves it empty (``mode("overwrite")`` deletes its target before
+    the job runs). The write goes to ``_staging_<name>`` beside ``path``
+    (underscore-prefixed: Spark's FileIndex ignores it) and a finished
+    table is swapped in by two renames, old → ``_old_<name>`` → dropped.
+    A crash between the renames leaves ``_old_<name>``, which the next
+    publish restores first."""
+    import shutil
+
+    parent, name = os.path.split(os.path.normpath(path))
+    staging = os.path.join(parent, f"_staging_{name}")
+    old = os.path.join(parent, f"_old_{name}")
+    if os.path.isdir(old) and not os.path.isdir(path):
+        os.rename(old, path)
+    try:
+        df.write.mode("overwrite").parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def read_gold(spark: SparkSession, path: str) -> DataFrame:

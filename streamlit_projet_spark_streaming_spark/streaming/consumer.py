@@ -10,47 +10,34 @@ rows by polling (``:1024-1026``). Spark realization:
         → processed_time = current_timestamp()                  [H2]
         → stateless 10-column enrichment chain                  [H3]
         → writeStream file sink, append + checkpoint            [H4]
-  silver → readStream → foreachBatch: recompute gold tables     [H5]
-  (4 shopping views + hourly tumbling series with watermark     [H6/H7])
+  silver → readStream → incremental gold (``incremental.py``)   [H5]
+  (4 shopping views from a streaming cube + hourly tumbling
+  series with watermark                                         [H6/H7])
 
-Two chained queries instead of one double-duty query: the silver writer
+Chained queries instead of one double-duty query: the silver writer
 keeps the file sink's exactly-once guarantee (sink-managed file manifest),
-and the gold refresher is an independent consumer of silver — exactly the
+and the gold queries are independent consumers of silver — exactly the
 reference's topology (Consumer writes BigQuery; views read it).
 
 Scale notes:
 - Enrichment is a pure map: no shuffle, no state, survives any scale.
 - Gold views are full-table aggregates by design (the reference's views are
-  logical, re-executed per query — SURVEY.md §7 risk 4); at 100 TB the
-  foreachBatch recompute reads only the aggregate-relevant columns
-  (column-pruned parquet scan) and the group-by cardinality (buckets ×
-  categories) is tiny, so the recompute cost is one scan — the same cost
-  BigQuery paid per dashboard poll.
+  logical, re-executed per query — SURVEY.md §7 risk 4). The gold path
+  never re-reads silver: ``incremental.start_incremental_gold`` keeps a
+  dimension-sized streaming cube and re-derives the views from it.
 - The hourly series uses a watermark so a TRUE incremental streaming
-  aggregation is also provided (``hourly_series_stream``) with bounded
+  aggregation is provided (``hourly_series_stream``) with bounded
   state [H7].
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.enrichment import enrich
-from ..plans import shopping_views as SV
 from ..sources.shopping import RAW_ORDER_SCHEMA
-
-GOLD_VIEWS = (
-    "v_age_preferences",
-    "v_gender_preferences",
-    "v_location_preferences",
-    "v_age_gender_category",
-    "hourly_series",
-)
-
 
 def start_ingest(
     spark: SparkSession,
@@ -117,65 +104,11 @@ def start_ingest(
     return writer.start()
 
 
-def refresh_gold(spark: SparkSession, silver_dir: str, gold_dir: str) -> None:
-    """Recompute the gold tables (4 views + hourly series) from silver.
-
-    Full-table semantics by design — identical results to the reference's
-    logical views at any point in time. Each gold table is tiny (bounded by
-    group cardinality) so the overwrite is cheap and atomic enough for a
-    polling reader (per-table directory swap).
-    """
-    silver = spark.read.schema(enrich_schema(spark)).parquet(silver_dir)
-    outputs: dict[str, DataFrame] = {
-        "v_age_preferences": SV.v_age_preferences(silver),
-        "v_gender_preferences": SV.v_gender_preferences(silver),
-        "v_location_preferences": SV.v_location_preferences(silver),
-        "v_age_gender_category": SV.v_age_gender_category(silver),
-        "hourly_series": hourly_series_batch(silver),
-    }
-    for name, df in outputs.items():
-        df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
-
-
 def enrich_schema(spark: SparkSession):
     """Enriched 21-column schema, derived once from the enrichment chain
     applied to an empty raw frame (no hand-maintained duplicate)."""
     empty = spark.createDataFrame([], RAW_ORDER_SCHEMA)
     return enrich(empty).schema
-
-
-def start_gold_refresh(
-    spark: SparkSession,
-    silver_dir: str,
-    gold_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    processing_time: str = "15 seconds",
-) -> StreamingQuery:
-    """Silver → gold refresher: a streaming reader of silver whose only job
-    is change detection; the refresh itself is the batch recompute above.
-
-    foreachBatch is the documented pattern for streaming top-k/array_agg
-    gold views: window functions aren't supported on streams
-    (SURVEY.md §7 risk 4), and view semantics are full-table anyway.
-    """
-    silver_stream = (
-        spark.readStream.schema(enrich_schema(spark)).parquet(silver_dir)
-    )
-
-    def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-        refresh_gold(spark, silver_dir, gold_dir)
-
-    writer = (
-        silver_stream.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def hourly_series_batch(silver: DataFrame) -> DataFrame:

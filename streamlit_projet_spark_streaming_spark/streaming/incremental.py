@@ -1,10 +1,9 @@
 """Incremental gold maintenance: a streaming super-aggregate from which
-every preference view derives (SURVEY.md §7 Phase 2, the scale path past
-``refresh_gold``'s full recompute).
+every preference view derives (SURVEY.md §7 Phase 2) — the gold path.
 
-``refresh_gold`` re-reads all of silver per micro-batch — correct (view
-semantics are full-table) but O(|silver|) every 15 s, which stops scaling
-once silver is fact-sized. The four preference views, however, are all
+Re-reading all of silver per micro-batch is correct (view semantics are
+full-table) but O(|silver|) every 15 s, which stops scaling once silver
+is fact-sized. The four preference views, however, are all
 re-aggregations of ONE additive statistic: per-(age_bucket, gender,
 location, category) count / sum(spend) / sum(rating). That statistic is
 incrementally maintainable from an append-only stream by a standard
@@ -15,8 +14,14 @@ derive all four views from it for pennies.
 
   silver stream → groupBy(4 dims) count/sum  [incremental state, update-
     only-touched-keys; complete-mode emit of the ~5k-row cube]
-  → foreachBatch: write cube snapshot + re-derive the 4 views (window
-    ranks over the cube — dimension-sized work)
+  → foreachBatch: publish the cube snapshot + re-derive the 4 views
+    (window ranks over the cube — dimension-sized work)
+
+The cube and the batch views are the same aggregation built by the same
+functions (``plans/preferences.py``), which is the stream/batch parity
+argument. Every gold table is published by ``sinks.publish_table``: a
+staged write swapped in by rename, so a failed batch never empties a
+table the dashboard reads.
 
 Late data: silver is append-only with ingest timestamps, so every row is
 new by construction — no watermark needed for the cube (the hourly series
@@ -26,14 +31,14 @@ keeps its watermarked tumbling window, ``consumer.hourly_series_stream``).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.shopping_views import age_bucket_col
-from ..operators.numeric import cents, ratio_round
-from ..operators.relational import ordered_array_agg
+from ..plans.preferences import item_stats
+from ..plans.shopping_views import MEASURES, age_bucket_col, views_from_cube
+from ..sinks.writer import publish_table
 
 #: The additive super-aggregate every preference view re-derives from.
 CUBE_KEYS = ("age_bucket", "gender", "location", "category")
@@ -43,102 +48,26 @@ def super_aggregate(silver: DataFrame) -> DataFrame:
     """Per-(age_bucket, gender, location, category) additive stats —
     works identically on a batch frame or a stream (same code path is the
     stream/batch parity argument)."""
-    return (
-        silver.withColumn("age_bucket", age_bucket_col())
-        .groupBy(*CUBE_KEYS)
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("purchase_amount_usd").alias("amt"),
-            F.sum("review_rating").alias("rat"),
-            # non-null measure counts so downstream averages keep AVG's
-            # NULL-ignoring semantics
-            F.count("purchase_amount_usd").alias("n_amt"),
-            F.count("review_rating").alias("n_rat"),
-        )
-    )
+    return item_stats(silver.withColumn("age_bucket", age_bucket_col()), CUBE_KEYS, MEASURES)
 
 
-def _stats_top1_from_cube(cube: DataFrame, key: str, key_alias: str) -> DataFrame:
-    by_cat = cube.groupBy(key, "category").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("amt").alias("amt"),
-        F.sum("rat").alias("rat"),
-        F.sum("n_amt").alias("n_amt"),
-        F.sum("n_rat").alias("n_rat"),
+def _start(
+    agg: DataFrame,
+    emit: Callable[[DataFrame, int], None],
+    mode: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    processing_time: str,
+) -> StreamingQuery:
+    """Start a gold query: ``emit`` publishes each micro-batch of ``agg``."""
+    writer = (
+        agg.writeStream.foreachBatch(emit)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
     )
-    key_w = Window.partitionBy(key)
-    rank_w = key_w.orderBy(F.desc("cnt"), F.asc("category"))
-    return (
-        by_cat.withColumn("orders", F.sum("cnt").over(key_w))
-        .withColumn(
-            "avg_spend",
-            ratio_round(
-                cents(F.sum("amt").over(key_w)), F.sum("n_amt").over(key_w) * 100, 4
-            ),
-        )
-        .withColumn(
-            "avg_rating",
-            ratio_round(
-                cents(F.sum("rat").over(key_w)), F.sum("n_rat").over(key_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col(key).alias(key_alias),
-            "orders",
-            "avg_spend",
-            "avg_rating",
-            F.col("category").alias("top_category"),
-        )
-        .orderBy(key_alias)
-    )
-
-
-def views_from_cube(cube: DataFrame) -> dict[str, DataFrame]:
-    """All four preference views re-derived from the ~5k-row cube —
-    dimension-sized work, no silver scan."""
-    loc_cat = cube.groupBy("location", "category").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("amt").alias("amt"),
-        F.sum("n_amt").alias("n_amt"),
-    )
-    loc_w = Window.partitionBy("location")
-    loc_rank = loc_w.orderBy(F.desc("cnt"), F.asc("category"))
-    v_location = (
-        loc_cat.withColumn("orders", F.sum("cnt").over(loc_w))
-        .withColumn(
-            "avg_spend",
-            ratio_round(
-                cents(F.sum("amt").over(loc_w)), F.sum("n_amt").over(loc_w) * 100, 4
-            ),
-        )
-        .withColumn("rn", F.row_number().over(loc_rank))
-        .filter(F.col("rn") <= 3)
-        .groupBy("location", "orders", "avg_spend")
-        .agg(
-            ordered_array_agg(F.col("cnt"), F.col("category"), ascending=False).alias(
-                "top_categories"
-            )
-        )
-        .orderBy("location")
-    )
-    v_agc = (
-        cube.groupBy("age_bucket", "gender", "category")
-        .agg(
-            F.sum("cnt").alias("orders"),
-            ratio_round(cents(F.sum("amt")), F.sum("n_amt") * 100, 4).alias(
-                "avg_spend"
-            ),
-        )
-        .orderBy("age_bucket", "gender", "category")
-    )
-    return {
-        "v_age_preferences": _stats_top1_from_cube(cube, "age_bucket", "age_bucket"),
-        "v_gender_preferences": _stats_top1_from_cube(cube, "gender", "gender"),
-        "v_location_preferences": v_location,
-        "v_age_gender_category": v_agc,
-    }
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=processing_time).start()
 
 
 def start_incremental_gold(
@@ -152,8 +81,8 @@ def start_incremental_gold(
     """Incrementally maintain the cube + views from the silver stream.
 
     complete-mode emit is the full ~5k-row cube each batch (Spark's agg
-    state updates only the keys the batch touched); foreachBatch persists
-    the snapshot and re-derives the views from it."""
+    state updates only the keys the batch touched); foreachBatch publishes
+    the snapshot and the views re-derived from it."""
     from .consumer import enrich_schema
 
     silver_stream = spark.readStream.schema(enrich_schema(spark)).parquet(silver_dir)
@@ -162,22 +91,13 @@ def start_incremental_gold(
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
         cube = batch_df.persist()
         try:
-            cube.write.mode("overwrite").parquet(os.path.join(gold_dir, "cube"))
+            publish_table(cube, os.path.join(gold_dir, "cube"))
             for name, df in views_from_cube(cube).items():
-                df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
+                publish_table(df, os.path.join(gold_dir, name))
         finally:
             cube.unpersist()
 
-    writer = (
-        cube_stream.writeStream.foreachBatch(_emit)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(cube_stream, _emit, "complete", checkpoint_dir, available_now, processing_time)
 
 
 def start_incremental_hourly(
@@ -212,20 +132,9 @@ def start_incremental_hourly(
     hourly = hourly_series_stream(silver_stream)
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(gold_dir, "hourly_series")
-        )
+        publish_table(batch_df, os.path.join(gold_dir, "hourly_series"))
 
-    writer = (
-        hourly.writeStream.foreachBatch(_emit)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(hourly, _emit, "complete", checkpoint_dir, available_now, processing_time)
 
 
 def start_incremental_hourly_update(
@@ -248,7 +157,9 @@ def start_incremental_hourly_update(
 
     foreachBatch merges the changed rows into the gold snapshot by window
     key: current snapshot ANTI JOIN changed-hours, UNION the delta,
-    written to a staging dir and directory-swapped in. The swap is the
+    published by ``sinks.publish_table`` (staged write, directory swap —
+    reading the current snapshot while writing it needs the staging
+    dir anyway). The swap is the
     portable stand-in for a transactional upsert — on a real deployment
     this is a Delta/Iceberg ``MERGE INTO`` keyed on ``hour`` (plain
     parquet has no atomic commit). Work per batch is
@@ -259,8 +170,6 @@ def start_incremental_hourly_update(
     ``max_files_per_trigger`` caps silver files per micro-batch (test
     hook: forces a genuinely multi-batch drain under availableNow).
     """
-    import shutil
-
     from .consumer import enrich_schema, hourly_series_stream
 
     reader = spark.readStream.schema(enrich_schema(spark))
@@ -280,24 +189,8 @@ def start_incremental_hourly_update(
                 ).unionByName(delta)
             else:
                 merged = delta
-            staging = out + ".staging"
-            merged.write.mode("overwrite").parquet(staging)
-            old = out + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(out):
-                os.rename(out, old)
-            os.rename(staging, out)
-            shutil.rmtree(old, ignore_errors=True)
+            publish_table(merged, out)
         finally:
             delta.unpersist()
 
-    writer = (
-        hourly.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(hourly, _merge, "update", checkpoint_dir, available_now, processing_time)

@@ -9,6 +9,7 @@ import pytest
 
 from streamlit_projet_spark_streaming_spark.operators import dedup as _dedup
 from streamlit_projet_spark_streaming_spark.operators import text as _text
+from streamlit_projet_spark_streaming_spark.plans.preferences import GOLD_VIEWS
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -61,6 +62,30 @@ def test_preference_views_scan_orders_once(spark, name):
     plan = _executed_plan(df)
     assert plan.count("orders.parquet") == 1, (
         f"{name}: fact table scanned {plan.count('orders.parquet')}x"
+    )
+
+
+@pytest.fixture(scope="module")
+def silver_dir(spark, tmp_path_factory):
+    from streamlit_projet_spark_streaming_spark.functions.enrichment import enrich
+
+    from .shopping_fixture import raw_df
+
+    path = str(tmp_path_factory.mktemp("silver") / "silver")
+    enrich(raw_df(spark, 500)).write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("name", GOLD_VIEWS)
+def test_shopping_views_scan_silver_once(spark, silver_dir, name):
+    """The shopping twins of the preference views are built by the same
+    ``plans/preferences.py`` functions, so the same single-scan property
+    must hold over a parquet silver table."""
+    from streamlit_projet_spark_streaming_spark.plans import shopping_views as SV
+
+    plan = _executed_plan(getattr(SV, name)(spark.read.parquet(silver_dir)))
+    assert plan.count("FileScan parquet") == 1, (
+        f"{name}: silver scanned {plan.count('FileScan parquet')}x"
     )
 
 

@@ -68,7 +68,7 @@ def test_gold_snapshot_per_view_isolation(spark, silver, tmp_path):
     import shutil
 
     from streamlit_projet_spark_streaming_spark.plans import shopping_views as SV
-    from streamlit_projet_spark_streaming_spark.serving.app import GOLD_VIEWS
+    from streamlit_projet_spark_streaming_spark.plans.preferences import GOLD_VIEWS
 
     gold_dir = str(tmp_path / "gold")
     for name in GOLD_VIEWS:

@@ -14,7 +14,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from streamlit_projet_spark_streaming_spark.sinks import write_packed_shards, write_partitioned
+from streamlit_projet_spark_streaming_spark.sinks import (
+    publish_table,
+    write_packed_shards,
+    write_partitioned,
+)
 from streamlit_projet_spark_streaming_spark.sinks.writer import read_gold
 from streamlit_projet_spark_streaming_spark.sources.catalog import load_table
 
@@ -122,3 +126,26 @@ def test_packed_shards_layout(spark, docs, tmp_path):
         by_file.setdefault(r["f"], []).append((r["pack_ix"], r["doc_id"]))
     for vals in by_file.values():
         assert vals == sorted(vals)
+
+
+def test_publish_table_keeps_previous_table_when_write_fails(spark, tmp_path):
+    """A gold publish whose job fails must leave the previous table
+    readable: ``mode("overwrite")`` straight onto the target would have
+    deleted it before the job ran."""
+    gold = tmp_path / "gold"
+    path = str(gold / "v_age_gender_category")
+    good = spark.createDataFrame([("18-24", 3), ("25-34", 5)], "age_bucket string, orders long")
+    publish_table(good, path)
+    failing = good.withColumn(
+        "orders",
+        F.when(F.col("orders") > 0, F.raise_error(F.lit("boom"))).otherwise(F.col("orders")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        publish_table(failing, path)
+    back = spark.read.parquet(path)
+    assert sorted(map(tuple, back.collect())) == [("18-24", 3), ("25-34", 5)]
+    assert os.listdir(gold) == ["v_age_gender_category"]  # no staging dir left
+
+    publish_table(good.filter("orders > 4"), path)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("25-34", 5)]
+    assert os.listdir(gold) == ["v_age_gender_category"]

@@ -1,12 +1,12 @@
-"""Streaming-layer tests (SURVEY.md §5.3): stream/batch enrichment parity,
-gold refresh equivalence, incremental hourly window parity."""
+"""Streaming-layer tests (SURVEY.md §5.3): stream/batch enrichment parity
+and incremental hourly window parity. Gold parity lives in
+``test_streaming_incremental.py``."""
 
 import os
 
 import pytest
 
 from streamlit_projet_spark_streaming_spark.functions.enrichment import enrich
-from streamlit_projet_spark_streaming_spark.plans import shopping_views as SV
 from streamlit_projet_spark_streaming_spark.sources.shopping import generate_raw_orders
 from streamlit_projet_spark_streaming_spark.streaming import consumer as C
 
@@ -23,8 +23,6 @@ def pipeline_dirs(tmp_path_factory):
         "input": str(base / "input"),
         "silver": str(base / "silver"),
         "ckpt_ingest": str(base / "ckpt_ingest"),
-        "gold": str(base / "gold"),
-        "ckpt_gold": str(base / "ckpt_gold"),
     }
     for d in dirs.values():
         os.makedirs(d, exist_ok=True)
@@ -87,31 +85,6 @@ def test_ingest_rejects_unknown_format(spark, tmp_path):
             spark, str(tmp_path), str(tmp_path), str(tmp_path),
             source_format="xml",
         )
-
-
-def test_gold_refresh_matches_batch(spark, drained):
-    """Gold tables after stream drain == batch recomputation over silver."""
-    q = C.start_gold_refresh(
-        spark,
-        drained["silver"],
-        drained["gold"],
-        drained["ckpt_gold"],
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(drained["silver"])
-    expect = {
-        "v_age_preferences": SV.v_age_preferences(silver),
-        "v_gender_preferences": SV.v_gender_preferences(silver),
-        "v_location_preferences": SV.v_location_preferences(silver),
-        "v_age_gender_category": SV.v_age_gender_category(silver),
-        "hourly_series": C.hourly_series_batch(silver),
-    }
-    for name, edf in expect.items():
-        gold = spark.read.parquet(os.path.join(drained["gold"], name))
-        assert canonical_rows(gold.toPandas()) == canonical_rows(edf.toPandas()), name
 
 
 def test_incremental_hourly_window_parity(spark, drained):
