@@ -1171,7 +1171,7 @@ _register(
 
 
 def _simhash_sql(nbits: int = 60, max_hamming: int = 6) -> str:
-    """DuckDB twin of ``dedup.simhash_pairs(portable=True)`` — generated
+    """DuckDB twin of ``dedup.simhash_pairs`` — generated
     with the same chunk layout as ``dedup.hamming_band_chunks``."""
     bit_sums = ",\n             ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
@@ -6450,9 +6450,10 @@ _register(
     WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
     toks AS (
       SELECT doc_id, w, i
-      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-           LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) gs,
-           LATERAL (SELECT ws[i] AS w) x
+      FROM (
+        SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS i
+        FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm)
+      )
       WHERE length(w) > 0
     ),
     bi AS (
@@ -10920,10 +10921,8 @@ _register(
     f"""
     WITH norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM documents),
     toks AS (
-      SELECT doc_id, w, i
-      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm),
-           LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) gs,
-           LATERAL (SELECT ws[i] AS w) x
+      SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS i
+      FROM (SELECT doc_id, string_split(t, ' ') AS ws FROM norm)
     ),
     bi AS (
       SELECT a.doc_id, a.w AS x, b.w AS y

@@ -195,15 +195,12 @@ def merge_packed_shards(
     token_col: str,
     budget: int,
     order_col: str | None = None,
-    strategy: str = "staging",
 ) -> DataFrame:
     """Apply a :func:`~..operators.sampling.shard_merge_plan` to an
     existing :func:`write_packed_shards` layout, rewriting ONLY the
     bucket directories that contain merge rows — the consolidation pass
     a curation pipeline runs after dedup shrinks previously full packs
     (r8 verdict item 7 roadmap: the shard-merge half).
-
-    Shared mechanics (both strategies):
 
     - the plan is computed from the CURRENT on-disk pack totals (so the
       caller deletes/dedups rows first, then consolidates);
@@ -218,9 +215,9 @@ def merge_packed_shards(
       difference between consolidating 2% of shards and re-exporting
       the corpus.
 
-    ``strategy="staging"`` (default — durable): affected buckets are
-    written to ``<path>/_staging_merge`` (underscore-prefixed, invisible
-    to readers) while the source tree stays untouched, then each bucket
+    Affected buckets are written to ``<path>/_staging_merge``
+    (underscore-prefixed, invisible to readers) while the source tree
+    stays untouched, then each bucket
     is swapped in with two POSIX renames (old → ``_backup_bucket=N``,
     staged → live) and the backup dropped. No executor-storage
     checkpoint of the data is needed: the write's lineage reads the
@@ -231,32 +228,23 @@ def merge_packed_shards(
     new data is live and the stale backup is dropped on the next run.
     A mid-run kill therefore leaves every bucket either fully old or
     fully new — per-bucket atomicity, cross-bucket progress. Requires a
-    posix-renameable path (local/NFS; on HDFS the same two-rename
-    protocol holds via the FileSystem API, but object stores without
-    atomic rename should use ``inplace``).
-
-    ``strategy="inplace"`` (opt-in): dynamic partition overwrite of the
-    affected buckets. One job, no renames, works on any committer — but
-    the affected rows must be eagerly ``localCheckpoint``-ed first
-    (Spark cannot overwrite files its own plan is reading), and a crash
-    after that checkpoint but mid-write leaves recovery to the parquet
-    commit protocol rather than an untouched source tree.
+    posix-renameable path (local/NFS); an object-store path (``s3a://``
+    and the like, which has no atomic rename) raises ``ValueError``
+    before anything is read.
 
     Returns the plan DataFrame (already consumed for the rewrite; the
     caller typically persists it as the consolidation audit record).
     """
+    import shutil
+
     from ..operators.sampling import shard_merge_plan
 
-    if strategy not in ("staging", "inplace"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    is_remote = "://" in path and not path.startswith("file://")
-    if strategy == "staging":
-        if is_remote:
-            raise ValueError(
-                "staging strategy needs a posix-renameable path; use "
-                "strategy='inplace' for object-store paths"
-            )
-        _recover_backups(path)
+    if "://" in path and not path.startswith("file://"):
+        raise ValueError(
+            "merge_packed_shards swaps buckets in by rename and needs a "
+            f"posix-renameable path (local or NFS), not {path!r}"
+        )
+    _recover_backups(path)
     current = spark.read.parquet(path)
     plan = shard_merge_plan(current, token_col, budget=budget)
     # EAGER: the plan is both consumed below AND returned to the caller
@@ -292,37 +280,19 @@ def merge_packed_shards(
         .drop("merged_pack_ix", "_off")
     )
     sort_tail = [order_col] if order_col else []
-    if strategy == "staging":
-        import shutil
-
-        staging = os.path.join(path, _STAGING_DIR)
-        if os.path.exists(staging):
-            shutil.rmtree(staging)  # leftover from a crashed run
-        # source tree untouched while this job runs: lineage reads the
-        # original files, the write lands in the staging dir
-        (
-            rewritten.repartition("bucket")
-            .sortWithinPartitions("bucket", "pack_ix", *sort_tail, "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-        for b in sorted(affected_buckets):
-            _swap_bucket_dir(path, staging, b)
-        shutil.rmtree(staging)
-        return plan
-    # inplace: EAGER materialization breaks the read-path lineage — the
-    # write below overwrites the very files the plan scans (Spark
-    # rejects a direct self-overwrite, and a lazy checkpoint would
-    # still read during the write job). Cost is bounded by the AFFECTED
-    # buckets' rows on executor storage.
-    rewritten = rewritten.localCheckpoint(eager=True)
+    staging = os.path.join(path, _STAGING_DIR)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)  # leftover from a crashed run
+    # source tree untouched while this job runs: lineage reads the
+    # original files, the write lands in the staging dir
     (
         rewritten.repartition("bucket")
         .sortWithinPartitions("bucket", "pack_ix", *sort_tail, "doc_id")
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
-        .parquet(path)
+        .parquet(staging)
     )
+    for b in sorted(affected_buckets):
+        _swap_bucket_dir(path, staging, b)
+    shutil.rmtree(staging)
     return plan

@@ -25,9 +25,9 @@ Scale notes:
   logical, re-executed per query — SURVEY.md §7 risk 4). The gold path
   never re-reads silver: ``incremental.start_incremental_gold`` keeps a
   dimension-sized streaming cube and re-derives the views from it.
-- The hourly series uses a watermark so a TRUE incremental streaming
-  aggregation is provided (``hourly_series_stream``) with bounded
-  state [H7].
+- The hourly series is a TRUE incremental streaming aggregation
+  (``hourly_series_stream``); its gold query runs in complete mode, so
+  state is one small row per hour seen [H7].
 """
 
 from __future__ import annotations
@@ -130,11 +130,10 @@ def hourly_series_stream(silver_stream: DataFrame) -> DataFrame:
     """TRUE incremental hourly aggregation [H6/H7]: tumbling window +
     watermark — the scale path when full recompute is no longer
     acceptable. The 1-hour watermark tolerates the reference's implied
-    lateness (poll interval + cache TTL ≪ 1 h) and bounds state in
-    append/update sinks; note that the ``complete``-mode consumer
-    (``incremental.start_incremental_hourly``) retains one state row per
-    distinct hour ever seen — see its docstring for the retention
-    trade-off."""
+    lateness (poll interval + cache TTL ≪ 1 h). The gold consumer
+    (``incremental.start_incremental_hourly``) runs in ``complete`` mode,
+    which retains one state row per distinct hour ever seen — see its
+    docstring for why that is the intended retention."""
     return (
         silver_stream.withWatermark("processed_time", "1 hour")
         .groupBy(F.window(F.col("processed_time"), "1 hour").alias("w"))

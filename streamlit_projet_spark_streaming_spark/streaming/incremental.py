@@ -54,15 +54,15 @@ def super_aggregate(silver: DataFrame) -> DataFrame:
 def _start(
     agg: DataFrame,
     emit: Callable[[DataFrame, int], None],
-    mode: str,
     checkpoint_dir: str,
     available_now: bool,
     processing_time: str,
 ) -> StreamingQuery:
-    """Start a gold query: ``emit`` publishes each micro-batch of ``agg``."""
+    """Start a gold query: ``emit`` publishes each complete-mode
+    micro-batch of ``agg`` (the full aggregate state)."""
     writer = (
         agg.writeStream.foreachBatch(emit)
-        .outputMode(mode)
+        .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -97,7 +97,7 @@ def start_incremental_gold(
         finally:
             cube.unpersist()
 
-    return _start(cube_stream, _emit, "complete", checkpoint_dir, available_now, processing_time)
+    return _start(cube_stream, _emit, checkpoint_dir, available_now, processing_time)
 
 
 def start_incremental_hourly(
@@ -119,13 +119,10 @@ def start_incremental_hourly(
     row per distinct hour ever seen. That is the point here — the gold
     table IS the all-hours series, and a year of hours is ~8.8k tiny rows —
     but it means the "bounded state" guarantee is "one row per hour", not
-    "only open windows". When watermark-bounded state is actually required
-    (e.g. second-granularity windows over years), use
-    ``start_incremental_hourly_update`` — the ``update``-mode +
-    merge-on-write variant whose state holds only open windows.
-    Companion to ``start_incremental_gold`` (a streaming query supports
-    one aggregation, so the cube and the time series are separate queries
-    over the same silver source)."""
+    "only open windows", and the table equals ``hourly_series_batch`` over
+    all of silver. Companion to ``start_incremental_gold`` (a streaming
+    query supports one aggregation, so the cube and the time series are
+    separate queries over the same silver source)."""
     from .consumer import enrich_schema, hourly_series_stream
 
     silver_stream = spark.readStream.schema(enrich_schema(spark)).parquet(silver_dir)
@@ -134,63 +131,5 @@ def start_incremental_hourly(
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
         publish_table(batch_df, os.path.join(gold_dir, "hourly_series"))
 
-    return _start(hourly, _emit, "complete", checkpoint_dir, available_now, processing_time)
+    return _start(hourly, _emit, checkpoint_dir, available_now, processing_time)
 
-
-def start_incremental_hourly_update(
-    spark: SparkSession,
-    silver_dir: str,
-    gold_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    processing_time: str = "15 seconds",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Bounded-state hourly gold: ``update``-mode emit + merge-on-write —
-    the scale path past ``start_incremental_hourly``'s complete mode.
-
-    Each micro-batch emits ONLY the hour windows it changed, and the
-    watermark EVICTS window state once the event-time frontier passes it —
-    so streaming state holds open windows only, regardless of how many
-    hours the stream has ever seen (the guarantee complete mode cannot
-    give; see the retention note on ``start_incremental_hourly``).
-
-    foreachBatch merges the changed rows into the gold snapshot by window
-    key: current snapshot ANTI JOIN changed-hours, UNION the delta,
-    published by ``sinks.publish_table`` (staged write, directory swap —
-    reading the current snapshot while writing it needs the staging
-    dir anyway). The swap is the
-    portable stand-in for a transactional upsert — on a real deployment
-    this is a Delta/Iceberg ``MERGE INTO`` keyed on ``hour`` (plain
-    parquet has no atomic commit). Work per batch is
-    O(|gold| rewrite + |delta|), vs complete mode's O(|all state|) emit;
-    with a partitioned/transactional sink the rewrite drops to the
-    touched partitions only.
-
-    ``max_files_per_trigger`` caps silver files per micro-batch (test
-    hook: forces a genuinely multi-batch drain under availableNow).
-    """
-    from .consumer import enrich_schema, hourly_series_stream
-
-    reader = spark.readStream.schema(enrich_schema(spark))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    silver_stream = reader.parquet(silver_dir)
-    hourly = hourly_series_stream(silver_stream)
-    out = os.path.join(gold_dir, "hourly_series")
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.persist()
-        try:
-            if os.path.isdir(out):
-                cur = delta.sparkSession.read.parquet(out)
-                merged = cur.join(
-                    delta.select("hour"), "hour", "left_anti"
-                ).unionByName(delta)
-            else:
-                merged = delta
-            publish_table(merged, out)
-        finally:
-            delta.unpersist()
-
-    return _start(hourly, _merge, "update", checkpoint_dir, available_now, processing_time)

@@ -685,61 +685,6 @@ def ewma_stream(hourly_points: DataFrame, window: int = 6) -> DataFrame:
     )
 
 
-def customer_running_totals_tws(silver_stream: DataFrame) -> DataFrame:
-    """``customer_running_totals`` on Spark 4's NEW arbitrary-state API
-    (``transformWithStateInPandas``) — same semantics, forward-looking
-    surface: typed ValueState instead of a raw tuple, an explicit
-    processor lifecycle (init/handleInputRows/close), and the RocksDB
-    state store (the API requires it; set
-    ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider before starting the query). Output is row-identical to the
-    old-API operator over the same stream — pytest-pinned — so either
-    surface can back the engine; state size is two scalars per key on
-    both.
-
-    ENV NOTE: the TWS python runner imports ``google.protobuf``; in
-    containers without protobuf the query fails at initialization (the
-    parity test importorskips there). No guard here — the operator is
-    plain public API and works wherever Spark 4's own dependency set is
-    complete.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n LONG, s DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["final_amount_usd"].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "customer_id": [key[0]],
-                    "n_orders": [n],
-                    "total_spend": [s],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return silver_stream.groupBy("customer_id").transformWithStateInPandas(
-        _RunningTotals(),
-        RUNNING_TOTALS_SCHEMA,
-        "Update",
-        "None",
-    )
-
-
 TRENDING_SCHEMA = StructType(
     [
         StructField("shard", LongType()),
@@ -1110,7 +1055,6 @@ def start_near_dup_screen(
     checkpoint_dir: str,
     max_hamming: int = 6,
     nbits: int = 60,
-    cache_index: bool = True,
 ):
     """Streaming NEAR-dup screen: each micro-batch of documents is
     SimHash-signed and banded against a static corpus signature index;
@@ -1127,16 +1071,13 @@ def start_near_dup_screen(
     decisions are definitionally identical (pytest parity). Per-batch
     work is batch-size ⋈ banded-index, the incremental-dedup shape.
 
-    ``cache_index`` (default True) persists the exploded corpus index
-    once: the foreachBatch closure holds a LAZY DataFrame, so without it
-    every trigger re-executes the full corpus plan — if ``corpus_sigs``
-    is computed (e.g. ``simhash_signatures`` over raw text), that is a
-    corpus-sized signature aggregation PER MICRO-BATCH, defeating the
-    batch-sized shape. Pass ``cache_index=False`` only when
-    ``corpus_sigs`` is a plain parquet scan that must re-plan per
-    trigger to pick up an updated signature file. Requires each
-    document to arrive whole in one micro-batch (the file-drop
-    contract, as everywhere in this module).
+    The exploded corpus index is persisted once: the foreachBatch
+    closure holds a LAZY DataFrame, so without it every trigger would
+    re-execute the full corpus plan — if ``corpus_sigs`` is computed
+    (e.g. ``simhash_signatures`` over raw text), that is a corpus-sized
+    signature aggregation PER MICRO-BATCH, defeating the batch-sized
+    shape. Requires each document to arrive whole in one micro-batch
+    (the file-drop contract, as everywhere in this module).
     """
     from ..operators.dedup import hamming_band_chunks, simhash_signatures
 
@@ -1153,9 +1094,8 @@ def start_near_dup_screen(
             ).alias("ch"),
         )
         .select("c_id", "c_sig", "ch.ci", "ch.cv")
+        .persist()
     )
-    if cache_index:
-        corpus_chunks = corpus_chunks.persist()
 
     def _screen(batch_df, _epoch):
         sigs = simhash_signatures(batch_df, nbits=nbits)
@@ -1466,8 +1406,8 @@ def start_psi_monitor(
     is an aggregation + tiny-grid join that reuses the BATCH operator
     verbatim per trigger, so stream and batch scores are identical by
     construction. State is zero — the reference is materialized ONCE
-    here (lazy localCheckpoint, the near-dup screen's cache_index
-    precedent) so each trigger re-broadcasts the ≤20-row table instead
+    here (lazy localCheckpoint, as the near-dup screen persists its
+    corpus index) so each trigger re-broadcasts the ≤20-row table instead
     of re-running the training-table aggregation behind it."""
     ref_counts = ref_counts.localCheckpoint(eager=False)
 

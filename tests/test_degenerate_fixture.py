@@ -13,7 +13,7 @@ the class cannot silently regress.
 
 import pytest
 
-from tools.degenerate_audit import build_fixture
+from tools.degenerate_audit import ORACLE_CONFIG, build_fixture
 
 from .oracle_harness import compare, duckdb_conn
 
@@ -140,6 +140,6 @@ def test_entry_survives_degenerate_rows(spark, degen_dir, name):
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
-    con = duckdb_conn(degen_dir)
-    problems = compare(qs[name](spark, degen_dir), con, oracles[name], name)
+    with duckdb_conn(degen_dir, config=ORACLE_CONFIG) as con:
+        problems = compare(qs[name](spark, degen_dir), con, oracles[name], name)
     assert not problems, problems

@@ -1,7 +1,9 @@
 """Incremental gold maintenance parity: the cube-derived views after the
 stream drains must equal the batch view computations over silver."""
 
+import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,39 +64,27 @@ def test_incremental_views_match_batch_views(spark, dirs):
         assert canonical_rows(gold.toPandas()) == canonical_rows(edf.toPandas()), name
 
 
-def test_incremental_hourly_matches_batch(spark, dirs):
-    """Incrementally maintained hourly series == batch date_trunc agg."""
-    ckpt = dirs["gold"] + "_hourly_ckpt"
-    q = I.start_incremental_hourly(
-        spark, dirs["silver"], dirs["gold"], ckpt, available_now=True
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    got = spark.read.parquet(os.path.join(dirs["gold"], "hourly_series"))
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(dirs["silver"])
-    expect = C.hourly_series_batch(silver)
-    assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas())
-
-
-def test_update_mode_hourly_matches_complete_mode(spark, dirs):
-    """VERDICT r2 item 4: the bounded-state (update-mode + merge-on-write)
-    hourly series must equal the complete-mode snapshot after a genuinely
-    multi-batch drain (maxFilesPerTrigger=1 forces one batch per silver
-    file, so the merge path — not a single lucky batch — is what's
-    checked)."""
-    import glob
-
-    ckpt = dirs["gold"] + "_hourly_upd_ckpt"
-    gold = dirs["gold"] + "_upd"
-    n_files = len(glob.glob(os.path.join(dirs["silver"], "*.parquet")))
-    assert n_files >= 2, "fixture must produce a multi-file silver table"
-    q = I.start_incremental_hourly_update(
-        spark, dirs["silver"], gold, ckpt, available_now=True,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    got = spark.read.parquet(os.path.join(gold, "hourly_series"))
-    silver = spark.read.schema(C.enrich_schema(spark)).parquet(dirs["silver"])
-    expect = C.hourly_series_batch(silver)
-    assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas())
+def test_incremental_hourly_matches_batch(spark, dirs, tmp_path):
+    """Incrementally maintained hourly series == batch date_trunc agg,
+    after each of two availableNow runs that resume from one checkpoint.
+    Silver grows between the runs, so the second run must fold only the
+    new files into the aggregate state the first run left behind."""
+    files = sorted(glob.glob(os.path.join(dirs["silver"], "*.parquet")))
+    assert len(files) >= 2, "fixture must produce a multi-file silver table"
+    silver_dir, gold_dir, ckpt = (str(tmp_path / k) for k in ("silver", "gold", "ckpt"))
+    os.makedirs(silver_dir)
+    schema = C.enrich_schema(spark)
+    half = len(files) // 2
+    for run, new_files in enumerate((files[:half], files[half:])):
+        for f in new_files:
+            shutil.copy(f, silver_dir)
+        q = I.start_incremental_hourly(
+            spark, silver_dir, gold_dir, ckpt, available_now=True
+        )
+        q.awaitTermination(120)
+        assert not q.isActive
+        read = sum(p["numInputRows"] for p in q.recentProgress)
+        assert read == spark.read.schema(schema).parquet(*new_files).count(), run
+        got = spark.read.parquet(os.path.join(gold_dir, "hourly_series"))
+        expect = C.hourly_series_batch(spark.read.schema(schema).parquet(silver_dir))
+        assert canonical_rows(got.toPandas()) == canonical_rows(expect.toPandas()), run

@@ -27,6 +27,10 @@ import sys
 
 SRC = "/root/testdata/sf0.001"
 DST = "/tmp/degen_sf"
+#: DuckDB memory cap for each oracle run. An oracle whose memory grows
+#: past it raises ``OutOfMemoryException`` and fails its case, instead
+#: of growing the process until the kernel kills the whole sweep.
+ORACLE_CONFIG = {"memory_limit": "4GB"}
 
 
 def build_fixture(dst: str = DST) -> str:
@@ -367,7 +371,6 @@ def main() -> int:
         # a typo'd entry name must not yield a zero-compare false green
         print(f"unknown entries: {sorted(unknown)}")
         return 2
-    con = duckdb_conn(sf_dir)
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -375,7 +378,8 @@ def main() -> int:
         if name not in oracles:
             continue
         try:
-            problems = compare(fn(spark, sf_dir), con, oracles[name], name)
+            with duckdb_conn(sf_dir, config=ORACLE_CONFIG) as con:
+                problems = compare(fn(spark, sf_dir), con, oracles[name], name)
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
             problems = [f"{name}: exception {type(ex).__name__}: {ex}"]
         if problems:
